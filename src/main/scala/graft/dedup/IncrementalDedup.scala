@@ -80,8 +80,9 @@ object IncrementalDedup {
   def save(a: Artifacts, path: String): Unit =
     a.keys.write.mode("overwrite").parquet(s"$path/keys")
 
-  def load(spark: SparkSession, path: String): Artifacts =
-    Artifacts(spark.read.parquet(s"$path/keys"))
+  /** The union of the artifacts saved at `paths`, read as one scan. */
+  def load(spark: SparkSession, paths: String*): Artifacts =
+    Artifacts(spark.read.parquet(paths.map(p => s"$p/keys"): _*))
 
   /** Screen a batch against the accepted artifacts. Returns one row
     * per batch doc: (id, exact_of, near_of, keep) — `exact_of` /
@@ -245,14 +246,15 @@ object IncrementalDedup {
     require(!fs.exists(target),
       s"compact: target $outPath already exists — compaction never " +
         "overwrites published state in place")
-    val merged = deltaPaths.map(p => load(spark, p))
-      .reduce((x, y) => Artifacts(x.keys.unionByName(y.keys)))
+    val merged = load(spark, deltaPaths: _*)
     val tmp = new org.apache.hadoop.fs.Path(target.getParent,
       target.getName + ".compact-tmp")
     fs.delete(tmp, true)
     save(Artifacts(merged.keys.distinct()), tmp.toString)
     require(fs.rename(tmp, target),
       s"compact: publish rename $tmp -> $target failed")
-    load(spark, outPath)
+    // the schema is known: no inference pass over the new artifact
+    Artifacts(spark.read.schema(merged.keys.schema)
+      .parquet(s"$outPath/keys"))
   }
 }

@@ -411,21 +411,24 @@ final class JdbcTargetWriter(
     user: Option[String] = None,
     password: Option[String] = None) extends TargetWriter {
 
-  private def withConn[T](f: Connection => T): T = {
-    val c = user match {
+  /** A close failure is attached to a failure of `f` as suppressed,
+    * never in its place.
+    */
+  private def withConn[T](f: Connection => T): T =
+    scala.util.Using.resource(user match {
       case Some(u) => DriverManager.getConnection(url, u, password.getOrElse(""))
       case None => DriverManager.getConnection(url)
-    }
-    try f(c) finally c.close()
-  }
+    })(f)
 
-  private def exec(c: Connection, sql: String): Unit = {
-    val st = c.createStatement()
-    try st.execute(sql) finally st.close()
-  }
+  private def exec(c: Connection, sql: String): Unit =
+    scala.util.Using.resource(c.createStatement())(_.execute(sql): Unit)
 
   /** inserter.rs:88-111: BEGIN; FK off; statements; FK on; COMMIT —
-    * rollback and rethrow on any failure.
+    * rollback and rethrow on any failure. The connection is closed
+    * right after, so auto-commit is not reset: on a connection the
+    * failure already closed, the reset would throw "No current
+    * connection" in place of the real error. A failed rollback rides
+    * along as suppressed.
     */
   private def transactional(statements: Seq[String]): Unit = withConn { c =>
     c.setAutoCommit(false)
@@ -436,11 +439,12 @@ final class JdbcTargetWriter(
       c.commit()
     } catch {
       case e: Throwable =>
-        try c.rollback() catch { case _: Throwable => () }
-        throw new RuntimeException(
+        val err = new RuntimeException(
           s"Cannot execute transaction query: ${statements.headOption
             .map(_.take(100)).getOrElse("EMPTY QUERY")}. Error: ${e.getMessage}", e)
-    } finally c.setAutoCommit(true)
+        try c.rollback() catch { case r: Throwable => err.addSuppressed(r) }
+        throw err
+    }
   }
 
   override def maxAllowedPacket: Long = flavor.maxPacketSql match {

@@ -776,34 +776,6 @@ object Dedup {
     * Scale shape per ingest: one accepted-postings scan pruned to the
     * batch footprint; CC rerun over |delta edges| + |touched members|
     * — the batch's blast radius, never the corpus.
-    *
-    * Round-21 floor shave (the r20 verdict's ask; clean-window warm
-    * pass 11.9 → 8.9 s at sf0.1, measured phase by phase): (1) the
-    * three postings deltas are staged in ONE batch-partitioned pass
-    * (disjoint pure functions of the fixture, so the per-delta file
-    * sets are byte-equivalent to three sequential corpus scans); (2)
-    * each ingest's delta pairs are pinned with localCheckpoint so the
-    * bucket-join plan executes once per batch instead of re-running
-    * inside both the CC fixpoint and the retired-delta write; (3) the
-    * delta-pair builds — pure functions of the postings, never of
-    * labels — run as concurrent jobs overlapping the base CC (guide
-    * §2.6), while the label-delta chain still folds strictly in
-    * arrival order; (4) the AQE-off narrow clone is gone (see the
-    * inline note — the union-find endgame absorbs every CC call here,
-    * so the clone only throttled the heavy pair builds). None of this
-    * changes what any artifact contains or the O(batch) per-ingest
-    * write contract — only how many synchronous jobs the demo
-    * schedules.
-    *
-    * Round 22 continues the same program (see the inline note): every
-    * artifact write is a leaf job overlapped off the critical path,
-    * the postings split is pinned once instead of being re-read from
-    * the staged files (removing the empty-partition-dir read hazard
-    * the r21 ADVICE flagged — an empty bucket is now just an empty
-    * filtered frame), the label view folds in memory over the pinned
-    * retired/relabeled frames, and the straggler futures are drained
-    * before the temp root is deleted (the r21 verdict's failure-path
-    * race).
     */
   private def incrementalComponents(s: SparkSession, dir: String)
       : DataFrame = {
@@ -815,34 +787,23 @@ object Dedup {
       .createTempDirectory("graft_ddinc_q").toString
     try {
       // No AQE-off narrow clone here (unlike dd_components): the
-      // distributed star rounds it exists for never run on this
-      // operator at oracle-gated scale — the union-find endgame
-      // absorbs every CC call at the FIRST signature — so the clone
-      // only pinned the heavy pair builds to 8 fixed-width shuffles
-      // on a 32-core box (the IncrementalIngest width lesson: the
-      // bucket HOF expansion is compute-bound and wants the full
-      // session width + AQE coalescing).
+      // union-find endgame absorbs every CC call at the first
+      // signature, so the distributed star rounds the clone exists for
+      // never run, and the compute-bound bucket expansion of the pair
+      // builds wants the full session width.
       //
-      // Round-22 floor shave (r21 verdict item 5; ~7.7 → ~4.5 s warm
-      // at sf0.1): the ONLY sequencing the algorithm requires is the
-      // label-delta fold order — every artifact WRITE (postings
-      // staging, l0, ret/ld deltas) is a leaf nothing later reads,
-      // because the in-memory frames the artifacts are written FROM
-      // are identical to what a read-back would return. So the
-      // postings are pinned once (the batch split is bench-fixture
-      // staging — a real crawl's batches arrive pre-split), every
-      // write runs as an overlapped job off the critical path (§2.6),
-      // and the label view folds over the pinned frames instead of
-      // re-reading l0/ret/ld per stage (§5 multi-consumer pinning; the
-      // read-back shape re-executed the fold chain per stage). The
-      // artifact chain itself — what gets written, per-ingest O(batch)
-      // — is unchanged; only the demo's job graph shrank.
+      // The only order the algorithm needs is the label-delta fold.
+      // The postings (the batch split is fixture staging — a real
+      // crawl's batches arrive pre-split) and every label frame are
+      // pinned, the label view folds over the pinned frames, and
+      // nothing reads the written artifacts back. So the artifact
+      // writes and both delta-pair builds (pure functions of the
+      // postings, never of labels) run as concurrent jobs: none of
+      // these small jobs fills the session's cores on its own, and
+      // the overlapped form measured faster at both 4 and 2 cores.
       import scala.concurrent.{Await, Future, blocking}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
-      // every overlapped write, so the failure path can drain them
-      // before deleting the temp root (a deleted-dir race otherwise
-      // turns one failure into a noisy secondary one)
       val writeFs = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
       val posts = IC.postings(docs, "doc_id", "text")
         .withColumn("b", when(bucket < 8, 0)
@@ -853,12 +814,6 @@ object Dedup {
       })
       def bucketPosts(i: Int) =
         posts.filter(col("b") === i).drop("b")
-      // Overlap the INDEPENDENT jobs (guide §2.6): each batch's delta
-      // pairs are a pure function of the postings deltas — they never
-      // read labels — so both pair builds run concurrently with the
-      // base CC instead of serializing behind it. The label-delta
-      // chain itself still folds strictly in arrival order below (the
-      // dependency that actually exists).
       val deltaF = (1 to 2).map { i =>
         i -> Future(blocking {
           IC.deltaPairs(posts.filter(col("b") < i).drop("b"),
@@ -866,17 +821,14 @@ object Dedup {
         })
       }.toMap
       try {
-        // stage 0: base labels from the seed postings delta; pinned so
-        // the l0 write, both per-stage view folds, and the final fold
-        // all consume the one materialization
+        // stage 0: base labels from the seed postings delta
         val base = graft.dedup.ConnectedComponents
           .alternatingStars(IC.pairsWithin(bucketPosts(0), 0.5))
           .select(col("node").as("doc_id"), col("component"))
           .localCheckpoint()
         writeFs += Future(blocking { base.write.parquet(s"$root/l0") })
-        // two ingest rounds: each WRITES only its own label deltas
-        // (retired/relabeled; overlapped — the fold below consumes the
-        // same pinned frames the writes do) and folds the view forward
+        // two ingest rounds, folded in arrival order: each WRITES only
+        // its own label deltas (retired/relabeled)
         var view = base
         (1 to 2).foreach { i =>
           val delta = Await.result(deltaF(i), Duration.Inf)
@@ -893,14 +845,14 @@ object Dedup {
           // pin before the sort (see Corpus.evalGramSet note): the
           // checkpoint outlives the temp-state delete; the terminal
           // order-by stays lazy like every other query's
-          .localCheckpoint() // materialize before the temp state is deleted
+          .localCheckpoint()
           .orderBy(col("doc_id"))
         writeFs.foreach(f => Await.result(f, Duration.Inf))
         out
       } finally {
-        // drain stragglers (delta builds + writes) before the temp
-        // root is deleted, swallowing their failures — the primary
-        // exception (if any) is already in flight
+        // drain stragglers before the temp root is deleted, swallowing
+        // their failures: the primary exception is already in flight,
+        // and a deleted-dir race would only add a noisy secondary one
         (deltaF.values ++ writeFs).foreach { f =>
           try { Await.ready(f, Duration.Inf); () }
           catch { case _: Throwable => () }
@@ -1773,16 +1725,19 @@ object Dedup {
     * drives [[graft.dedup.IncrementalDedup]] through a real
     * multi-micro-batch Structured Streaming run (foreachBatch +
     * versioned persisted artifacts): even docs are the pre-accepted
-    * seed, odd docs arrive as TWO micro-batches (doc_id % 4 == 1 then
-    * % 4 == 3). The oracle unrolls both stages: a batch-2 doc is a dup
-    * of any seed doc, any batch-1 KEEPER (rejects never enter the
-    * accepted set), or an earlier batch-2 doc; each stage's
-    * hot-shingle cap counts only that stage's bucket universe, exactly
-    * as screen() builds its buckets.
+    * seed, odd docs arrive as TWO micro-batches. The ingest splits by
+    * ((doc_id − 1) div 2) mod 2; the oracle stages by doc_id % 4 == 1
+    * then % 4 == 3, so a green hash also proves the two splits agree.
+    * The oracle unrolls both stages: a batch-2 doc is a dup of any
+    * seed doc, any batch-1 KEEPER (rejects never enter the accepted
+    * set), or an earlier batch-2 doc; each stage's hot-shingle cap
+    * counts only that stage's bucket universe, exactly as screen()
+    * builds its buckets.
     */
   private def incrementalIngest(s: SparkSession, dir: String): DataFrame =
     graft.streaming.IncrementalIngest.ingest(s, dir,
-      threshold = 0.5, shingleK = ShingleK, maxShingleDf = MaxShingleDf)
+      threshold = 0.5, shingleK = ShingleK, maxShingleDf = MaxShingleDf,
+      nBatches = 2)
 
   /** The same two-arrival ingest with LSM delta compaction LIVE on the
     * stream path: after batch 1 publishes, the delta chain (seed + d1)
@@ -1793,30 +1748,25 @@ object Dedup {
   private def ingestCompacted(s: SparkSession, dir: String): DataFrame =
     graft.streaming.IncrementalIngest.ingest(s, dir,
       threshold = 0.5, shingleK = ShingleK, maxShingleDf = MaxShingleDf,
-      compactEvery = 2)
+      nBatches = 2, compactEvery = 2)
 
   /** FOUR real micro-batches through the ingest gate with LIVE delta
-    * compaction at the measured amortization optimum (cadence 4: the
-    * fold fires once, at batch 4's start, after the chain has grown
-    * to 3 deltas — SCALING.md's 12-batch sf1* table's optimum, 82 s
-    * never-compact vs 44 s cadence 4). Cadence A/B at sf0.1 on this
-    * 4-batch fixture, steal-clean 3-rep medians (r19): cadence 2
-    * (3 folds) 16.7 s, cadence 4 (1 fold) 11.0 s — at this batch
-    * count the fold costs more than the longer-chain reads it saves,
-    * so the suite entry runs the optimum and `evs_ingest_compacted`
-    * plus IncrementalIngestSpec keep the every-batch-folds cadence
-    * covered under the oracle gate. The two-arrival queries above pin
-    * the gate's semantics; this one pins the LSM shape the gate
-    * actually runs at on a crawl: the delta chain grows, compaction
-    * collapses it, later batches screen the compacted artifact, and
-    * verdicts stay byte-equal to the never-compacted chain (the
-    * invariance IncrementalIngestSpec proves).
+    * compaction at cadence 4: the fold fires once, at batch 4's start,
+    * after the chain has grown to 3 deltas (SCALING.md's 12-batch
+    * sf1* table puts the amortization optimum there; at this batch
+    * count cadence 2's three folds cost more than the shorter chain
+    * reads save). `evs_ingest_compacted` and IncrementalIngestSpec keep
+    * the every-batch-folds cadence covered. This query pins the LSM
+    * shape the gate runs at on a crawl: the delta chain grows,
+    * compaction collapses it, later batches screen the compacted
+    * artifact, and verdicts stay byte-equal to the never-compacted
+    * chain (the invariance IncrementalIngestSpec proves).
     * Oracle: the same stage unrolled FOUR times — batch b's screen
     * sees even docs ∪ kept(1..b−1) ∪ its own earlier-id arrivals,
     * generated from one loop so the unroll depth cannot drift.
     */
   private def ingestMultibatch(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.IncrementalIngest.ingestMany(s, dir,
+    graft.streaming.IncrementalIngest.ingest(s, dir,
       threshold = 0.5, shingleK = ShingleK, maxShingleDf = MaxShingleDf,
       nBatches = 4, compactEvery = 4)
 

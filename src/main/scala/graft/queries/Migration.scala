@@ -1913,9 +1913,9 @@ object Migration {
     // 256-row summaries, materialized once so neither side re-scans
     // for the clean-bucket total (at 100 TB each is one aggregation
     // pass over its table; everything downstream reads 256 rows).
-    // The two sides are independent single-table passes — run them as
-    // concurrent jobs (guide §2.6) instead of serializing two eager
-    // checkpoints
+    // The two sides are independent single-table passes, run as
+    // concurrent jobs: the overlapped form measured faster at both 4
+    // and 2 cores than two serial checkpoints.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration

@@ -56,12 +56,11 @@ object CdcApply {
     StructField("op", StringType), StructField("kb", IntegerType)))
 
   /** Deterministic per-(fixture, buckets) staging of the five change-
-    * log version snapshots, built once per JVM (the IncrementalIngest
-    * stagedDirs convention): the snapshots are pure functions of the
-    * fixture, and re-deriving five full source scans per invocation
-    * billed repeated bench reps for work a real CDC source never
-    * repeats. The mutable per-run state (arrivals, state dir) stays
-    * fresh per invocation.
+    * log version snapshots, built once per JVM: the snapshots are
+    * pure functions of the fixture, and re-deriving five full source
+    * scans per invocation billed repeated bench reps for work a real
+    * CDC source never repeats. The mutable per-run state (arrivals,
+    * state dir) stays fresh per invocation.
     */
   private val stagedDirs =
     scala.collection.concurrent.TrieMap.empty[(String, Int), String]

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.StagedFixture
 import graft.dedup.IncrementalDedup
 
 /** Structured-Streaming integration of the incremental ingest gate —
@@ -19,445 +20,171 @@ import graft.dedup.IncrementalDedup
   * batch machinery while the streaming engine handles arrival,
   * ordering, and checkpointing.
   *
-  * Artifacts are persisted as DELTAS (`d0` = the seed, `dN` = batch
-  * N's keepers only; a reader unions the deltas): each batch WRITES
-  * O(batch) and never rewrites the corpus-sized accepted set — the
-  * LSM shape every growing index uses. Periodic compaction of old
-  * deltas (the production maintenance job) is `compactEvery`:
-  * IncrementalDedup.compact folds the chain into one equivalent
-  * artifact between batches, atomically. Publishing a
-  * new delta directory is atomic, nothing is overwritten in place, and
-  * a failed batch can re-screen against the deltas it started from
-  * (effectively-once verdicts under retries).
+  * Artifacts are persisted as DELTAS (the seed, then one delta per
+  * batch holding that batch's keepers only; a reader unions the
+  * deltas): each batch WRITES O(batch) and never rewrites the
+  * corpus-sized accepted set — the LSM shape every growing index uses.
+  * Publishing a new delta directory is atomic, nothing is overwritten
+  * in place, and a failed batch can re-screen against the deltas it
+  * started from (effectively-once verdicts under retries).
   *
   * Scale shape (inherited from IncrementalDedup.screen): accepted
   * postings are semi-joined down to the batch's shingle footprint
   * before anything shuffles, so per-batch cost is bounded by the
-  * BATCH, not the corpus — the property that makes continuous ingest
-  * viable at 100 TB. Verdicts append to a parquet sink per batch, the
-  * natural audit log of an ingest gate.
+  * BATCH, not the corpus. Verdicts append to a parquet sink per batch,
+  * the natural audit log of an ingest gate.
   */
 object IncrementalIngest {
 
-  /** Run the two-arrival ingest simulation over the fixture: the even
-    * docs are the pre-accepted seed corpus; odd docs arrive in two
-    * micro-batches (doc_id % 4 == 1, then % 4 == 3) — the batch
-    * boundary is deterministic and scale-free, so a SQL oracle can
-    * replay both stages exactly. Files are written between
-    * `processAllAvailable()` calls, so the arrival split is a real
-    * multi-batch stream (the late-data-drop staging pattern), not a
-    * replayed single batch.
+  /** Run the ingest simulation over the fixture: the even docs are the
+    * pre-accepted seed corpus; odd docs arrive in `nBatches` real
+    * micro-batches split by ((doc_id − 1) div 2) mod nBatches (for
+    * nBatches = 2 that is doc_id mod 4 == 1, then == 3). The split is
+    * deterministic and scale-free, so a SQL oracle can replay every
+    * stage exactly. Each arrival's files land between
+    * `processAllAvailable()` calls, so every batch is its own
+    * micro-batch.
+    *
+    * Each batch runs, in order: compaction, screen, pin, audit-log
+    * write, keeper-delta publish. Compaction happens at batch START,
+    * when the chain is about to be read, so the run's last delta is
+    * never folded into an artifact nothing reads, and a crash between
+    * batches leaves the raw chain authoritative.
     *
     * Returns one verdict row per odd doc: (doc_id, exact_of, near_of,
-    * keep, arrival_batch). A batch-2 doc that duplicates a batch-1
-    * KEEPER is dropped; one that duplicates only a batch-1 REJECT is
+    * keep, arrival_batch). A later doc that duplicates an earlier
+    * KEEPER is dropped; one that duplicates only an earlier REJECT is
     * kept (rejects never enter the accepted set) — the semantics that
     * distinguish accepted-set screening from corpus-wide dedup.
+    *
+    * @param compactEvery when > 0, a batch whose delta chain has
+    *   reached this length first folds it into one artifact
+    *   (IncrementalDedup.compact — row distinct, atomic publish); 0 =
+    *   never compact (the read cost grows with the chain).
     */
-  /** Deterministic per-fixture staging (seed delta + the two arrival
-    * parquet sets) reused across invocations in one JVM — the
-    * sentinel-stream convention: an index built once, rebuilt only per
-    * process. The mutable per-run state (verdict log, later deltas,
-    * arrival directory) is always fresh.
-    */
-  private val stagedDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), String]
-
-  /** @param compactEvery when > 0, run delta compaction between
-    *   micro-batches once the published-delta count reaches it: all
-    *   current deltas merge into one (IncrementalDedup.compact — row
-    *   distinct, atomic publish) and subsequent batches screen against
-    *   the single compacted artifact. 0 = never compact (deltas
-    *   accumulate; the read cost grows with batch count — fine for a
-    *   bounded run, the maintenance job at 100 TB ingest).
-    */
-  def ingest(spark: SparkSession, dir: String,
-      threshold: Double, shingleK: Int, maxShingleDf: Int,
-      compactEvery: Int = 0): DataFrame = {
-    // cloned session: caller's conf untouched (the EventStream
-    // convention). The shuffle width is INHERITED, not narrowed: the
-    // screen's bucket pair expansion is compute-bound (interpreted
-    // HOFs over collect_list buckets), and pinning it to 8 partitions
-    // left 3/4 of a 32-core box idle on the hot stage — measured at
-    // sf0.1: warm screen+write 2.20 s at width 8 vs 1.67 s at 32,
-    // cold 4.92 s vs 2.23 s. (A join-based pair expansion was also
-    // measured — 3.32 s vs the HOF's 1.63: more shuffles, no win.)
-    val ss = spark.newSession()
-
-    val docs = graft.Tables(ss, dir, "documents")
-    val staged = stagedDirs.getOrElseUpdate((dir, shingleK), {
-      val st = Files.createTempDirectory("graft_ingest_staged")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(st.toFile): Unit))
-      // seed: even docs accepted wholesale, persisted as delta d0
-      IncrementalDedup.save(IncrementalDedup.artifacts(
-        docs.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", "text",
-        shingleK), st.resolve("seed_delta").toString)
-      for ((name, mod4) <- Seq(("batch1", 1), ("batch2", 3)))
-        docs.filter(pmod(col("doc_id"), lit(4)) === mod4)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(st.resolve(name).toString)
-      st.toString
-    })
-    val stagedPath = java.nio.file.Paths.get(staged)
-
-    val work = Files.createTempDirectory("graft_ingest_stream")
-    val arrivals = work.resolve("arrivals")
-    Files.createDirectories(arrivals)
-
-    // the persisted accepted set = union of all published deltas
-    // (d0 = the staged seed; later deltas publish into the run dir)
-    var deltaPaths = Vector(stagedPath.resolve("seed_delta").toString)
-    // audit/delta dir names come from an ingested-batch counter, NOT
-    // deltaPaths.size — compaction collapses the path list, and a
-    // size-derived name would collide with an earlier batch's dir
-    var batchNo = 0
-    var compactNo = 0
-    def loadAccepted(s2: SparkSession): IncrementalDedup.Artifacts =
-      deltaPaths.map(p => IncrementalDedup.load(s2, p))
-        .reduce((x, y) => IncrementalDedup.Artifacts(
-          x.keys.unionByName(y.keys)))
-
-    // an arrival = copy of the staged batch's parquet part files; the
-    // second copy happens between processAllAvailable() calls so it
-    // arrives as its own micro-batch (the late-data-drop pattern).
-    // Stage under a .tmp name (invisible to the *.parquet glob) and
-    // atomically rename into place — a plain copy straight to the
-    // final name can be listed half-written by a running source.
-    def arrive(name: String): Unit = {
-      val listing = Files.list(stagedPath.resolve(name))
-      try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-        .forEach { f =>
-          val tmp = arrivals.resolve(s"${name}_${f.getFileName}.tmp")
-          Files.copy(f, tmp)
-          Files.move(tmp, arrivals.resolve(s"${name}_${f.getFileName}"),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
-      finally listing.close()
-    }
-    arrive("batch1")
-
-    // each batch's pinned verdict blocks, appended by the stream
-    // thread and folded into the result after the stream stops — the
-    // blocks ARE what the audit log was written from, so the union
-    // equals the old read-back of the verdict parquet log without
-    // re-listing and re-scanning it (the write itself stays: it is the
-    // audit-log contract)
-    val verdictFrames =
-      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // eagerly-started compaction of a finished chain (see below):
-    // (future of the compacted path, the exact delta list it covers)
-    var pendingCompact: Option[(scala.concurrent.Future[String],
-      Vector[String])] = None
-    val nArrivals = 2
-
-    val q = ss.readStream
-      .schema(docs.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(arrivals.toString)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val s2 = batch.sparkSession
-          val sc = s2.sparkContext
-          import scala.concurrent.{Await, Future, blocking}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          // LSM maintenance takes effect at batch START, when the
-          // chain is about to be READ — but the FOLD itself is a pure
-          // function of the published deltas, so it was started right
-          // after the publish that completed the chain (overlapping
-          // the inter-batch idle, §2.6) and is only awaited and
-          // swapped in here. The swap still happens at batch start, so
-          // a crash between batches leaves the raw chain authoritative
-          // and the restart contract unchanged.
-          if (compactEvery > 0 && deltaPaths.size >= compactEvery) {
-            val cPath = pendingCompact match {
-              case Some((f, covered)) if covered == deltaPaths =>
-                Await.result(f, Duration.Inf)
-              case _ => // fallback: no pre-started fold for this chain
-                compactNo += 1
-                sc.setJobDescription(s"ingest: compact $compactNo")
-                val p = work.resolve(s"compacted_$compactNo").toString
-                IncrementalDedup.compact(s2, deltaPaths, p)
-                p
-            }
-            pendingCompact = None
-            deltaPaths = Vector(cPath)
-          }
-          val accepted = loadAccepted(s2)
-          val (verdictsRaw, bKeys) = IncrementalDedup.screenWithKeys(
-            batch, accepted, "doc_id", "text", threshold, shingleK,
-            maxShingleDf, ordered = false)
-          // batch identity derived from the deterministic split, so
-          // the verdict log is stable however the source batches
-          val verdicts = verdictsRaw.withColumn("arrival_batch",
-            when(pmod(col("id"), lit(4)) === 1, 1).otherwise(2))
-          // the audit log partitions BY BATCH, so the keeper read-back
-          // below (and any later per-batch audit) scans O(batch) — an
-          // append-then-rescan of the whole log would creep to
-          // O(corpus) per batch as ingest accumulates
-          batchNo += 1
-          val batchVerdicts =
-            work.resolve(s"verdicts/b$batchNo").toString
-          sc.setJobDescription(s"ingest: screen b$batchNo")
-          val v = verdicts.localCheckpoint() // screen executes ONCE
-          // audit-log write and keeper-delta publish both consume the
-          // pinned verdict blocks and are independent of each other —
-          // overlap them (guide §2.6); the audit future is awaited in
-          // a finally so a failed publish never leaves an orphaned
-          // write job racing the run-dir cleanup (r21 advice)
-          val auditF = Future(blocking {
-            sc.setJobDescription(s"ingest: audit b$batchNo")
-            v.write.parquet(batchVerdicts) // audit log from blocks
-          })
-          try {
-            val keptIds = v // keepers from blocks, no parquet read-back
-              .filter(col("keep")).select(col("id").as("doc_id"))
-            // publish ONLY this batch's keepers as the next delta —
-            // O(batch) written, the corpus-sized union never rewritten;
-            // the delta rows are the screen's own pinned batch postings
-            // filtered to the keepers (row-for-row what re-expanding
-            // the kept docs produced before, minus the re-scan)
-            val next = work.resolve(s"artifacts_d$batchNo").toString
-            sc.setJobDescription(s"ingest: publish b$batchNo")
-            IncrementalDedup.save(IncrementalDedup.Artifacts(
-              bKeys.join(keptIds, col("id") === col("doc_id"),
-                "left_semi")), next)
-            deltaPaths :+= next
-          } finally {
-            Await.result(auditF, Duration.Inf)
-            sc.setJobDescription(null)
-          }
-          // pre-start the fold the NEXT batch will swap in — never
-          // after the LAST arrival (it would fold the run's final
-          // delta into an artifact nothing reads, the waste the
-          // batch-START convention exists to avoid)
-          if (compactEvery > 0 && deltaPaths.size >= compactEvery &&
-              batchNo < nArrivals) {
-            compactNo += 1
-            val p = work.resolve(s"compacted_$compactNo").toString
-            val covered = deltaPaths
-            pendingCompact = Some((Future(blocking {
-              sc.setJobDescription(s"ingest: compact $compactNo (eager)")
-              IncrementalDedup.compact(s2, covered, p)
-              sc.setJobDescription(null)
-              p
-            }), covered))
-          }
-          verdictFrames.synchronized { verdictFrames += v; () }
-        }
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      arrive("batch2")
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      // drain an unconsumed eager fold before the run dir is deleted
-      pendingCompact.foreach { case (f, _) =>
-        try { scala.concurrent.Await.ready(f,
-          scala.concurrent.duration.Duration.Inf); () }
-        catch { case _: Throwable => () }
-      }
-    }
-
-    val vs = verdictFrames.synchronized { verdictFrames.toVector }
-    require(vs.nonEmpty,
-      s"ingest: no micro-batch arrived from $dir — fixture too small " +
-        "to stage either arrival batch")
-    val out = vs.reduce(_.unionByName(_))
-      .select(col("id").as("doc_id"), col("exact_of"), col("near_of"),
-        col("keep"), col("arrival_batch"))
-      // materialize before the run's staging (arrivals + deltas +
-      // verdict log) is deleted; pinned pre-sort so the terminal
-      // order-by stays lazy like every other query's
-      .localCheckpoint()
-      .orderBy(col("doc_id"))
-    org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
-    out
-  }
-
-  /** N-micro-batch generalization of [[ingest]] — the shape that lets
-    * the `compactEvery` knob show its AMORTIZATION side: the r17/r18
-    * two-arrival fixture can only show the fold's cost (one batch ever
-    * screens the compacted artifact, and a 2-delta chain is cheap to
-    * read), while here the delta chain grows to `nBatches` and every
-    * later batch pays the reader fan-in the compaction exists to
-    * bound. Same seed (even docs, reused from [[ingest]]'s staging),
-    * same screen, same batch-START compaction point, same
-    * delta-publish contract; odd docs arrive in `nBatches` real
-    * micro-batches split by ((doc_id−1)/2) mod nBatches — for
-    * nBatches = 2 this is exactly [[ingest]]'s doc_id mod 4 split, so
-    * the two APIs are verdict-identical there (spec-pinned).
-    */
-  def ingestMany(spark: SparkSession, dir: String, threshold: Double,
+  def ingest(spark: SparkSession, dir: String, threshold: Double,
       shingleK: Int, maxShingleDf: Int, nBatches: Int,
-      compactEvery: Int): DataFrame = {
-    require(nBatches >= 1, s"ingestMany: nBatches=$nBatches must be >= 1")
-    // AQE stays ON in the clone: an r22 A/B (3 reps, 32 cores) measured
-    // AQE-off at 45 jobs but 509 tasks / ~115 s summed task time vs
-    // AQE-on's 59 jobs / 99 tasks / ~15 s — fixed 32-wide shuffles
-    // replicate the bucket-expansion work across mostly-empty tasks,
-    // and the fewer job boundaries don't pay for it
+      compactEvery: Int = 0): DataFrame = {
+    require(nBatches >= 1, s"ingest: nBatches=$nBatches must be >= 1")
+    // cloned session: the caller's conf stays untouched. Width and AQE
+    // are inherited: the screen's bucket pair expansion is
+    // compute-bound, so a narrowed or fixed-width clone leaves cores
+    // idle or replicates the work across mostly-empty tasks.
     val ss = spark.newSession()
     val docs = graft.Tables(ss, dir, "documents")
-    // reuse [[ingest]]'s per-fixture seed; stage this call's batches
-    // under the run dir (cheap: one pass over the odd docs)
-    val staged = stagedDirs.getOrElseUpdate((dir, shingleK), {
-      val st = Files.createTempDirectory("graft_ingest_staged")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(st.toFile): Unit))
+    def arrivalBatch(id: String): Column =
+      (pmod(expr(s"($id - 1) div 2"), lit(nBatches)) + 1).cast("int")
+
+    // fixture-pure staging, built once per fixture content: the seed
+    // (even docs, accepted wholesale) and one arrival file set per batch
+    val seed = StagedFixture.dir(
+      StagedFixture.key(s"ingest_seed_k$shingleK", dir),
+      "graft_ingest_seed") { t =>
       IncrementalDedup.save(IncrementalDedup.artifacts(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", "text",
-        shingleK), st.resolve("seed_delta").toString)
-      for ((name, mod4) <- Seq(("batch1", 1), ("batch2", 3)))
-        docs.filter(pmod(col("doc_id"), lit(4)) === mod4)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(st.resolve(name).toString)
-      st.toString
-    })
-    val work = Files.createTempDirectory("graft_ingest_many")
-    val arrivals = work.resolve("arrivals")
-    Files.createDirectories(arrivals)
-    // one batch-partitioned pass stages every arrival file set (the
-    // old shape re-scanned the odd docs once per batch — nBatches scan
-    // + write jobs for one partitioned write's worth of bytes); the
-    // per-batch file sets are identical, the data files carry exactly
-    // docs.schema (the partition column stays in the directory name)
-    docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-      .withColumn("b",
-        (pmod(expr("(doc_id - 1) div 2"), lit(nBatches)) + 1).cast("int"))
-      .coalesce(1).write.mode("overwrite")
-      .partitionBy("b").parquet(work.resolve("stage").toString)
-
-    var deltaPaths = Vector(
-      java.nio.file.Paths.get(staged).resolve("seed_delta").toString)
-    var batchNo = 0
-    var compactNo = 0
-    def loadAccepted(s2: SparkSession): IncrementalDedup.Artifacts =
-      deltaPaths.map(p => IncrementalDedup.load(s2, p))
-        .reduce((x, y) => IncrementalDedup.Artifacts(
-          x.keys.unionByName(y.keys)))
-    def arrive(b: Int): Unit = {
-      val stageDir = work.resolve(s"stage/b=$b")
-      // a batch empty at tiny scale factors stages no partition dir:
-      // no arrival file, the stream sees one fewer micro-batch — same
-      // verdicts as the old empty-file arrival (batch.isEmpty no-op)
-      if (!Files.isDirectory(stageDir)) return
-      val listing = Files.list(stageDir)
-      try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-        .forEach { f =>
-          val tmp = arrivals.resolve(s"b${b}_${f.getFileName}.tmp")
-          Files.copy(f, tmp)
-          Files.move(tmp, arrivals.resolve(s"b${b}_${f.getFileName}"),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
-      finally listing.close()
+        shingleK), t)
+    }
+    val staged = StagedFixture.dir(
+      StagedFixture.key(s"ingest_arrivals_n$nBatches", dir),
+      "graft_ingest_arrivals") { t =>
+      docs.filter(pmod(col("doc_id"), lit(2)) === 1)
+        .withColumn("b", arrivalBatch("doc_id"))
+        .coalesce(1).write.mode("overwrite")
+        .partitionBy("b").parquet(t)
     }
 
-    // pinned per-batch verdict blocks, folded after the stream stops
-    // (see ingest's note — the audit-log writes stay)
-    val verdictFrames =
-      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // eagerly-started chain fold (see ingest's note): started after
-    // the publish that completed the chain, awaited + swapped in at
-    // the next batch's start
-    var pendingCompact: Option[(scala.concurrent.Future[String],
-      Vector[String])] = None
+    val work = Files.createTempDirectory("graft_ingest_run")
+    try {
+      val arrivals = work.resolve("arrivals")
+      Files.createDirectories(arrivals)
+      def arrive(b: Int): Unit = {
+        val stageDir = Paths.get(staged, s"b=$b")
+        // a batch with no docs stages no partition dir: the stream
+        // sees one fewer micro-batch
+        if (Files.isDirectory(stageDir)) {
+          val listing = Files.list(stageDir)
+          // copy under a .tmp name (invisible to the *.parquet glob)
+          // and rename into place: a running source can list a plain
+          // copy half-written
+          try listing.filter(_.getFileName.toString.endsWith(".parquet"))
+            .forEach { f =>
+              val tmp = arrivals.resolve(s"b${b}_${f.getFileName}.tmp")
+              Files.copy(f, tmp)
+              Files.move(tmp, arrivals.resolve(s"b${b}_${f.getFileName}"),
+                StandardCopyOption.ATOMIC_MOVE)
+            }
+          finally listing.close()
+        }
+      }
 
-    val q = ss.readStream
-      .schema(docs.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(arrivals.toString)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
+      // the persisted accepted set = union of all published deltas.
+      // Delta names come from a batch counter, not deltaPaths.size:
+      // compaction collapses the list, and a size-derived name would
+      // collide with an earlier batch's dir.
+      var deltaPaths = Vector(seed)
+      var batchNo = 0
+      var compactNo = 0
+      // each batch's pinned verdicts, unioned after the stream stops
+      val verdictFrames =
+        scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+      val q = ss.readStream
+        .schema(docs.schema)
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(arrivals.toString)
+        .writeStream
+        // inside the run dir: Spark keeps its own temporary checkpoint
+        // dir when a query fails
+        .option("checkpointLocation", work.resolve("checkpoint").toString)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
           val s2 = batch.sparkSession
           val sc = s2.sparkContext
-          import scala.concurrent.{Await, Future, blocking}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          if (compactEvery > 0 && deltaPaths.size >= compactEvery) {
-            val cPath = pendingCompact match {
-              case Some((f, covered)) if covered == deltaPaths =>
-                Await.result(f, Duration.Inf)
-              case _ =>
-                compactNo += 1
-                sc.setJobDescription(s"ingestMany: compact $compactNo")
-                val p = work.resolve(s"compacted_$compactNo").toString
-                IncrementalDedup.compact(s2, deltaPaths, p)
-                p
-            }
-            pendingCompact = None
-            deltaPaths = Vector(cPath)
-          }
-          val accepted = loadAccepted(s2)
-          val (verdictsRaw, bKeys) = IncrementalDedup.screenWithKeys(
-            batch, accepted, "doc_id", "text", threshold, shingleK,
-            maxShingleDf, ordered = false)
-          val verdicts = verdictsRaw.withColumn("arrival_batch",
-            (pmod(expr("(id - 1) div 2"), lit(nBatches)) + 1).cast("int"))
           batchNo += 1
-          sc.setJobDescription(s"ingestMany: screen b$batchNo")
-          val v = verdicts.localCheckpoint()
-          // audit write ∥ keeper-delta publish (see ingest's note)
-          val auditF = Future(blocking {
-            sc.setJobDescription(s"ingestMany: audit b$batchNo")
-            v.write.parquet(work.resolve(s"verdicts/b$batchNo").toString)
-          })
-          try {
-            sc.setJobDescription(s"ingestMany: publish b$batchNo")
-            val keptIds = v.filter(col("keep"))
-              .select(col("id").as("doc_id"))
-            val next = work.resolve(s"artifacts_d$batchNo").toString
-            IncrementalDedup.save(IncrementalDedup.Artifacts(
-              bKeys.join(keptIds, col("id") === col("doc_id"),
-                "left_semi")), next)
-            deltaPaths :+= next
-          } finally {
-            Await.result(auditF, Duration.Inf)
-            sc.setJobDescription(null)
-          }
-          // pre-start the fold the NEXT batch will swap in (never
-          // after the last arrival — see ingest's note)
-          if (compactEvery > 0 && deltaPaths.size >= compactEvery &&
-              batchNo < nBatches) {
-            compactNo += 1
-            val p = work.resolve(s"compacted_$compactNo").toString
-            val covered = deltaPaths
-            pendingCompact = Some((Future(blocking {
-              sc.setJobDescription(s"ingestMany: compact $compactNo (eager)")
-              IncrementalDedup.compact(s2, covered, p)
-              sc.setJobDescription(null)
-              p
-            }), covered))
-          }
-          verdictFrames.synchronized { verdictFrames += v; () }
+          val accepted =
+            if (compactEvery > 0 && deltaPaths.size >= compactEvery) {
+              compactNo += 1
+              val p = work.resolve(s"compacted_$compactNo").toString
+              sc.setJobDescription(s"ingest: compact $compactNo")
+              val folded = IncrementalDedup.compact(s2, deltaPaths, p)
+              deltaPaths = Vector(p)
+              folded
+            } else IncrementalDedup.load(s2, deltaPaths: _*)
+          sc.setJobDescription(s"ingest: screen b$batchNo")
+          val (verdicts, bKeys) = IncrementalDedup.screenWithKeys(batch,
+            accepted, "doc_id", "text", threshold, shingleK, maxShingleDf,
+            ordered = false)
+          // pinned: the screen executes once for the audit write, the
+          // keeper publish and the result
+          val v = verdicts.withColumn("arrival_batch", arrivalBatch("id"))
+            .localCheckpoint()
+          // the audit log partitions BY BATCH, so a per-batch audit
+          // scans O(batch), not the whole log
+          sc.setJobDescription(s"ingest: audit b$batchNo")
+          v.write.parquet(work.resolve(s"verdicts/b$batchNo").toString)
+          // publish ONLY this batch's keepers as the next delta: the
+          // screen's own batch postings, filtered to the keepers
+          sc.setJobDescription(s"ingest: publish b$batchNo")
+          val next = work.resolve(s"artifacts_d$batchNo").toString
+          IncrementalDedup.save(IncrementalDedup.Artifacts(
+            bKeys.join(v.filter(col("keep")).select(col("id").as("doc_id")),
+              col("id") === col("doc_id"), "left_semi")), next)
+          deltaPaths :+= next
+          verdictFrames += v
+          sc.setJobDescription(null)
         }
-      }
-      .start()
-    try for (b <- 1 to nBatches) { arrive(b); q.processAllAvailable() }
-    finally {
-      q.stop()
-      pendingCompact.foreach { case (f, _) =>
-        try { scala.concurrent.Await.ready(f,
-          scala.concurrent.duration.Duration.Inf); () }
-        catch { case _: Throwable => () }
-      }
-    }
+        .start()
+      try for (b <- 1 to nBatches) { arrive(b); q.processAllAvailable() }
+      finally q.stop()
 
-    val vs = verdictFrames.synchronized { verdictFrames.toVector }
-    require(vs.nonEmpty,
-      s"ingestMany: no micro-batch arrived from $dir — fixture too " +
-        "small to stage any arrival batch")
-    val out = vs.reduce(_.unionByName(_))
-      .select(col("id").as("doc_id"), col("exact_of"), col("near_of"),
-        col("keep"), col("arrival_batch"))
-      .localCheckpoint()
-      .orderBy(col("doc_id"))
-    org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
-    out
+      require(verdictFrames.nonEmpty,
+        s"ingest: no micro-batch arrived from $dir — the fixture has no " +
+          "odd doc_id to stage as an arrival")
+      // the verdict frames are pinned blocks, not files: the result
+      // outlives the run dir's delete below
+      verdictFrames.reduce(_.unionByName(_))
+        .select(col("id").as("doc_id"), col("exact_of"), col("near_of"),
+          col("keep"), col("arrival_batch"))
+        .orderBy(col("doc_id"))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
   }
 }

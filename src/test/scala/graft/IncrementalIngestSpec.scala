@@ -1,7 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.IncrementalIngest
 
 /** Multi-batch semantics of the streaming ingest gate
   * (`graft.streaming.IncrementalIngest` → `evs_incremental_ingest`):
@@ -134,30 +141,68 @@ class IncrementalIngestSpec extends AnyFunSuite {
     assert(plain.nonEmpty && compacted == plain)
   }
 
-  test("ingestMany: nBatches=2 equals the two-arrival ingest verdict " +
-    "for verdict; a 5-batch chain is cadence-invariant") {
+  test("five batches: cadence-invariant, one verdict per odd doc") {
     val dir = "/root/testdata/sf0.001"
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).toSeq
-    val two = rows(graft.streaming.IncrementalIngest.ingest(
-      spark, dir, threshold = 0.5, shingleK = 3, maxShingleDf = 64,
-      compactEvery = 2))
-    val many2 = rows(graft.streaming.IncrementalIngest.ingestMany(
-      spark, dir, threshold = 0.5, shingleK = 3, maxShingleDf = 64,
-      nBatches = 2, compactEvery = 2))
-    assert(many2.nonEmpty && many2 == two,
-      "((doc_id-1) div 2) mod 2 must equal the doc_id mod 4 split")
+    def rows(compactEvery: Int) =
+      IncrementalIngest.ingest(spark, dir, threshold = 0.5, shingleK = 3,
+        maxShingleDf = 64, nBatches = 5, compactEvery = compactEvery)
+        .collect().map(_.toString).toSeq
     // five real micro-batches: compacting every 3 deltas must leave
     // every verdict identical to the never-compacted chain
-    val n5raw = rows(graft.streaming.IncrementalIngest.ingestMany(
-      spark, dir, threshold = 0.5, shingleK = 3, maxShingleDf = 64,
-      nBatches = 5, compactEvery = 0))
-    val n5cad = rows(graft.streaming.IncrementalIngest.ingestMany(
-      spark, dir, threshold = 0.5, shingleK = 3, maxShingleDf = 64,
-      nBatches = 5, compactEvery = 3))
+    val n5raw = rows(0)
+    val n5cad = rows(3)
     assert(n5raw.nonEmpty && n5cad == n5raw)
     // the N-batch split changes WHICH verdicts arise (arrival order
     // matters by design), but every odd doc gets exactly one verdict
-    assert(n5raw.size == two.size)
+    val odd = Tables(spark, dir, "documents")
+      .filter("doc_id % 2 = 1").count()
+    assert(n5raw.size == odd)
+  }
+
+  private def writeDocs(at: Path, docs: Seq[(Long, String)]): Unit = {
+    import spark.implicits._
+    docs.toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$at/documents.parquet")
+  }
+
+  private def ingest2(at: Path): Seq[String] =
+    IncrementalIngest.ingest(spark, at.toString, threshold = 0.5,
+      shingleK = 3, maxShingleDf = 64, nBatches = 2)
+      .collect().map(_.toString).toSeq
+
+  test("a failed ingest leaves no run directory behind") {
+    val fx = Files.createTempDirectory("graft_ingest_even")
+    // no odd doc_id: nothing ever arrives, and the ingest refuses
+    writeDocs(fx, Seq(0L -> "a b c d", 2L -> "p q r s"))
+    def runDirs(): Set[String] = {
+      val ls = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_ingest_run")).toSet
+      finally ls.close()
+    }
+    val before = runDirs()
+    try intercept[IllegalArgumentException](ingest2(fx))
+    finally FileUtils.deleteQuietly(fx.toFile)
+    assert((runDirs() -- before).isEmpty)
+  }
+
+  test("a fixture regenerated at the same path is staged afresh") {
+    val fx = Files.createTempDirectory("graft_ingest_regen")
+    // doc 0 is the seed; 1 and 5 arrive in batch 1, 3 in batch 2
+    writeDocs(fx, Seq(0L -> "a b c d", 1L -> "a b c d e",
+      3L -> "p q r s", 5L -> "x y z w"))
+    val first = ingest2(fx)
+    // same path, new texts: doc 1 no longer matches the seed, doc 3 does
+    writeDocs(fx, Seq(0L -> "p q r s", 1L -> "a b c d e",
+      3L -> "p q r s t", 5L -> "x y z w"))
+    val second = ingest2(fx)
+    val copy = Files.createTempDirectory("graft_ingest_copy")
+    FileUtils.copyDirectory(fx.toFile, copy.toFile)
+    val fresh = try ingest2(copy) finally {
+      FileUtils.deleteQuietly(fx.toFile)
+      FileUtils.deleteQuietly(copy.toFile)
+    }
+    assert(fresh != first, "the regenerated fixture must change verdicts")
+    assert(second == fresh)
   }
 }
