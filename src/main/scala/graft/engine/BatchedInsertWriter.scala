@@ -4,10 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.util.LongAccumulator
 
 /** Executor-side sink for rendered INSERT batches. One instance is
-  * serialized into each partition task — a JDBC implementation opens
-  * its connection in `open` (one connection per partition, the Spark
-  * analogue of the reference's one-connection-per-table stream) and
-  * commits each `execute` as a transaction with FK checks off.
+  * serialized into each partition task, which calls `open` once, then
+  * `execute` per batch, then `close`. The migrator's sink
+  * ([[TargetBatchSink]]) uses only `execute`: the JDBC writer opens a
+  * connection per batch and commits it as one transaction with FK
+  * checks off.
   */
 trait BatchSink extends Serializable {
   def open(partitionId: Int): Unit = {}

@@ -222,8 +222,8 @@ case object AnsiFlavor extends SqlFlavor {
   * (/root/reference/src/extract/extractor.rs:25-128). The schema probe
   * uses JDBC DatabaseMetaData (the portable equivalent of the
   * reference's INFORMATION_SCHEMA.COLUMNS + constraint-usage query);
-  * the full scan is `spark.read.jdbc`, partitioned on a numeric
-  * primary key when one exists so a large source table is ranged
+  * the full scan is `spark.read.jdbc`, partitioned on an integral
+  * primary-key column when one exists so a large source table is ranged
   * across executors instead of streamed through one connection — the
   * Spark-native upgrade of the reference's single-connection
   * `stream_rows`.
@@ -232,13 +232,16 @@ final class JdbcSchemaSource(url: String, numPartitions: Int = 8,
     user: Option[String] = None, password: Option[String] = None)
     extends SchemaSource {
 
-  private def withConn[T](f: Connection => T): T = {
-    val c = user match {
-      case Some(u) => DriverManager.getConnection(url, u, password.getOrElse(""))
-      case None => DriverManager.getConnection(url)
-    }
-    try f(c) finally c.close()
+  private def connect(): Connection = user match {
+    case Some(u) => DriverManager.getConnection(url, u, password.getOrElse(""))
+    case None => DriverManager.getConnection(url)
   }
+
+  /** A close failure is attached to a failure of `f` as suppressed,
+    * never in its place.
+    */
+  private def withConn[T](f: Connection => T): T =
+    scala.util.Using.resource(connect())(f)
 
   // one probe per table per source instance: Migrator fetches the
   // schema and read() needs only the PK column — without the cache
@@ -356,40 +359,55 @@ final class JdbcSchemaSource(url: String, numPartitions: Int = 8,
     cols.toSeq
   }
 
-  /** Distributed scan. With a single-column numeric primary key, the
-    * read is range-partitioned on it (bounds probed with one MIN/MAX
-    * query) so each executor pulls its own id range over its own
-    * connection; otherwise a single-partition read (the reference's
-    * one-stream behavior) is the fallback.
+  /** Distributed scan under [[PartitionedScan]]'s rule, over
+    * ANSI-quoted identifiers.
     */
   override def read(spark: SparkSession, table: String): DataFrame = {
     val props = new java.util.Properties
     user.foreach(props.setProperty("user", _))
     password.foreach(props.setProperty("password", _))
-    val numericPk = getTableSchema(table).filter(c =>
-      c.constraints.contains(Constraint.PrimaryKey)) match {
-      case Seq(only) if Seq(MssqlType.TinyInt, MssqlType.SmallInt,
-        MssqlType.Int, MssqlType.BigInt).contains(only.dataType) =>
-        Some(only.columnName)
-      case _ => None
-    }
-    val bounds = numericPk.flatMap { pk =>
-      withConn { c =>
-        val st = c.createStatement()
-        val rs = st.executeQuery(
-          s"""SELECT MIN("$pk"), MAX("$pk") FROM "$table"""")
-        val b = if (rs.next() && rs.getObject(1) != null)
+    PartitionedScan.read(spark, url, table, getTableSchema(table),
+      n => s""""$n"""", () => connect(), numPartitions, props)
+  }
+}
+
+/** The live sources' one scan rule. The read is range-partitioned on
+  * the first integral primary-key column in column order, whether the
+  * key has one column or several, with bounds probed by one MIN/MAX
+  * query; each executor then pulls its own key range over its own
+  * connection. A key column is never null, so every row lands in
+  * exactly one partition, and the write, which runs inside the scan's
+  * partitions, fans out with it. A table with no integral key column,
+  * or whose key spans a single value, keeps the reference's
+  * one-stream read.
+  */
+private[engine] object PartitionedScan {
+
+  private val integral: Set[MssqlType] =
+    Set(MssqlType.TinyInt, MssqlType.SmallInt, MssqlType.Int, MssqlType.BigInt)
+
+  /** `quote` is the source's identifier quoting; `connect` opens the
+    * bounds probe's connection, which is closed here.
+    */
+  def read(spark: SparkSession, url: String, table: String,
+      schema: Seq[ColumnSchema], quote: String => String,
+      connect: () => Connection, numPartitions: Int,
+      props: java.util.Properties): DataFrame = {
+    val dbtable = quote(table)
+    val key = schema.find(c => c.constraints.contains(Constraint.PrimaryKey) &&
+      integral(c.dataType)).map(c => quote(c.columnName))
+    val bounds = key.flatMap { k =>
+      scala.util.Using.Manager { use =>
+        val rs = use(use(use(connect()).createStatement())
+          .executeQuery(s"SELECT MIN($k), MAX($k) FROM $dbtable"))
+        if (rs.next() && rs.getObject(1) != null)
           Some((rs.getLong(1), rs.getLong(2))) else None
-        rs.close(); st.close()
-        b
-      }.filter { case (lo, hi) => hi > lo }
+      }.get
     }
-    (numericPk, bounds) match {
-      case (Some(pk), Some((lo, hi))) =>
-        spark.read.jdbc(url, s""""$table"""", s""""$pk"""",
-          lo, hi, numPartitions, props)
-      case _ =>
-        spark.read.jdbc(url, s""""$table"""", props)
+    (key, bounds) match {
+      case (Some(k), Some((lo, hi))) if hi > lo =>
+        spark.read.jdbc(url, dbtable, k, lo, hi, numPartitions, props)
+      case _ => spark.read.jdbc(url, dbtable, props)
     }
   }
 }

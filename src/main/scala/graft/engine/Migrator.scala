@@ -186,9 +186,10 @@ final class Migrator(
   }
 }
 
-/** Bridges executor-side batches back to the TargetWriter. In local
-  * mode the writer is shared directly; a cluster JDBC implementation
-  * would build its own connection per partition in `open`.
+/** Bridges executor-side batches back to the TargetWriter: each
+  * batch is one `executeBatch` call, which for [[JdbcTargetWriter]]
+  * opens, commits and closes its own connection. `open`/`close` are
+  * left as no-ops.
   */
 private final class TargetBatchSink(writer: TargetWriter) extends BatchSink {
   override def execute(sql: String, rows: Int): Unit =

@@ -1059,10 +1059,11 @@ private final class MssqlModeStmtHandler(underlying: Statement,
 final class MssqlSchemaSource(url: String, numPartitions: Int = 8)
     extends SchemaSource {
 
-  private def withConn[T](f: Connection => T): T = {
-    val c = DriverManager.getConnection(url)
-    try f(c) finally c.close()
-  }
+  /** A close failure is attached to a failure of `f` as suppressed,
+    * never in its place.
+    */
+  private def withConn[T](f: Connection => T): T =
+    scala.util.Using.resource(DriverManager.getConnection(url))(f)
 
   private val schemaCache =
     scala.collection.concurrent.TrieMap.empty[String, Seq[ColumnSchema]]
@@ -1128,8 +1129,8 @@ final class MssqlSchemaSource(url: String, numPartitions: Int = 8)
   }
 
   /** Distributed scan over the T-SQL wire ([bracket]-quoted via the
-    * registered Spark dialect), range-partitioned on a numeric PK
-    * like the portable source. Decode quirks applied on the way out:
+    * registered Spark dialect), under [[PartitionedScan]]'s rule like
+    * the portable source. Decode quirks applied on the way out:
     * datetimeoffset columns (stored as their offset-bearing text)
     * convert to UTC instants — format.rs:140-161's offset-subtraction
     * — so downstream sees one timeline, which is exactly what the
@@ -1137,35 +1138,9 @@ final class MssqlSchemaSource(url: String, numPartitions: Int = 8)
     */
   override def read(spark: SparkSession, table: String): DataFrame = {
     val schema = getTableSchema(table)
-    val props = new java.util.Properties
-    val dbtable = mssqlIdentifier(table)
-    val numericPk = schema.filter(
-      _.constraints.contains(Constraint.PrimaryKey)) match {
-      case Seq(only) if Seq(MssqlType.TinyInt, MssqlType.SmallInt,
-        MssqlType.Int, MssqlType.BigInt).contains(only.dataType) =>
-        Some(only.columnName)
-      case _ => None
-    }
-    val bounds = numericPk.flatMap { pk =>
-      withConn { c =>
-        val st = c.createStatement()
-        try {
-          val rs = st.executeQuery(
-            s"SELECT MIN(${mssqlIdentifier(pk)}), MAX(${mssqlIdentifier(pk)}) " +
-              s"FROM $dbtable")
-          try {
-            if (rs.next() && rs.getObject(1) != null)
-              Some((rs.getLong(1), rs.getLong(2))) else None
-          } finally rs.close()
-        } finally st.close()
-      }.filter { case (lo, hi) => hi > lo }
-    }
-    val raw = (numericPk, bounds) match {
-      case (Some(pk), Some((lo, hi))) =>
-        spark.read.jdbc(url, dbtable, mssqlIdentifier(pk),
-          lo, hi, numPartitions, props)
-      case _ => spark.read.jdbc(url, dbtable, props)
-    }
+    val raw = PartitionedScan.read(spark, url, table, schema,
+      mssqlIdentifier, () => DriverManager.getConnection(url), numPartitions,
+      new java.util.Properties)
     schema.foldLeft(raw) { (df, c) =>
       MssqlModeEngine.canonicalDecode(c).fold(df)(
         e => df.withColumn(c.columnName, e(col(c.columnName))))

@@ -148,6 +148,31 @@ class JdbcEngineSpec extends AnyFunSuite {
       .read(spark, "SUPPLIER")
     assert(df.rdd.getNumPartitions == 4)
     assert(df.count() == seeded("SUPPLIER"))
+
+    // a composite key ranges on its first integral column, so a fact
+    // table with several LN per OK fans out like a one-column key; a
+    // key with no integral column keeps the one-stream read. Own
+    // database: the migration tests below expect the seeded tables only.
+    val url = "jdbc:derby:memory:graft_jdbc_ck;create=true"
+    val c = DriverManager.getConnection(url)
+    val st = c.createStatement()
+    Seq("CK", "VK").foreach(t =>
+      try st.execute(s"DROP TABLE $t") catch { case _: java.sql.SQLException => () })
+    st.execute("CREATE TABLE CK (OK BIGINT NOT NULL, LN INT NOT NULL, " +
+      "V VARCHAR(20), PRIMARY KEY (OK, LN))")
+    st.execute("INSERT INTO CK VALUES " + (for (ok <- 1 to 50; ln <- 1 to 4)
+      yield s"($ok, $ln, 'v$ok.$ln')").mkString(", "))
+    st.execute("CREATE TABLE VK (K VARCHAR(10) NOT NULL PRIMARY KEY, N INT)")
+    st.execute("INSERT INTO VK VALUES ('a', 1), ('b', 2), ('c', 3)")
+    st.close(); c.close()
+
+    val src = new JdbcSchemaSource(url, numPartitions = 4)
+    val ck = src.read(spark, "CK")
+    assert(ck.rdd.getNumPartitions == 4)
+    val plain = spark.read.jdbc(url, "CK", new java.util.Properties)
+    assert(ck.count() == 200 && plain.count() == 200)
+    assert(ck.exceptAll(plain).isEmpty && plain.exceptAll(ck).isEmpty)
+    assert(src.read(spark, "VK").rdd.getNumPartitions == 1)
   }
 
   test("incremental-watermark filter is PUSHED into the JDBC source") {

@@ -53,11 +53,44 @@ private object LinkDroppingDriver extends Driver {
   def getParentLogger = throw new java.sql.SQLFeatureNotSupportedException()
 }
 
+/** `jdbc:graftbadclose:` — a connection on which every call fails,
+  * and whose `close` then fails with a different error.
+  */
+private object CloseFailingDriver extends Driver {
+  def connect(url: String, info: Properties): Connection =
+    if (!acceptsURL(url)) null
+    else Proxy.newProxyInstance(getClass.getClassLoader,
+      Array[Class[_]](classOf[Connection]), new InvocationHandler {
+        def invoke(p: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
+          throw new SQLException(
+            if (m.getName == "close") "close failed" else "probe failed")
+      }).asInstanceOf[Connection]
+
+  def acceptsURL(url: String): Boolean = url.startsWith("jdbc:graftbadclose:")
+  def getPropertyInfo(url: String, info: Properties) =
+    Array.empty[DriverPropertyInfo]
+  def getMajorVersion: Int = 1
+  def getMinorVersion: Int = 0
+  def jdbcCompliant: Boolean = false
+  def getParentLogger = throw new java.sql.SQLFeatureNotSupportedException()
+}
+
 /** A batch whose connection dies mid-transaction: the writer must
   * surface the underlying error, not a secondary failure from cleanup
-  * on the dead connection, and the target must hold no row of it.
+  * on the dead connection, and the target must hold no row of it. The
+  * live sources keep a failed probe's error the same way.
   */
 class TransactionFailureSpec extends AnyFunSuite {
+
+  test("a failed source probe keeps its error when close fails too") {
+    DriverManager.registerDriver(CloseFailingDriver)
+    val url = "jdbc:graftbadclose:src"
+    Seq(new JdbcSchemaSource(url), new MssqlSchemaSource(url)).foreach { src =>
+      val e = intercept[SQLException](src.fetchTables())
+      assert(e.getMessage == "probe failed")
+      assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("close failed"))
+    }
+  }
 
   test("a batch that loses its connection fails with the underlying " +
     "error and commits none of its rows") {
